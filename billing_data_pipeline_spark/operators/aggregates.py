@@ -183,6 +183,17 @@ def grouped_profile(
     # (k+1)x shuffle volume.
     gnames: list[str] = []  # output names
     knames: list[str] = []  # physical grouping columns in `tmp`
+    taken = {c.lower() for c in df.columns}
+
+    def fresh(name: str) -> str:
+        # a temp column must not shadow an input column (or an earlier
+        # temp): select("*", ...) would append a duplicate name, and every
+        # later reference to it would be ambiguous (case-insensitively,
+        # under Spark's default resolution)
+        while name.lower() in taken:
+            name = "_" + name
+        taken.add(name.lower())
+        return name
     # output aliases of the expression group cols via ONE throwaway
     # analysis pass (no job runs; r11: one pass for all of them instead
     # of one per column — construction is bench-timed driver overhead)
@@ -200,7 +211,7 @@ def grouped_profile(
             # original column
             nm = next(expr_names)
             gnames.append(nm)
-            k = f"_gp_key{i}" if nm in df.columns else nm
+            k = fresh(f"_gp_key{i}") if nm in df.columns else fresh(nm)
             knames.append(k)
             added.append(g.alias(k))
     # Shuffle narrow precomputed values, not raw inputs (r12, guide
@@ -213,19 +224,18 @@ def grouped_profile(
     # WHERE the row-local expressions run moves (scan side, where the
     # guide wants per-row work, instead of post-shuffle).
     m = F.col(measure) if isinstance(measure, str) else measure
-    added.append(m.alias("_gp_m"))
-    aggs = measure_aggs("_gp_m")
+    m_name = fresh("_gp_m")
+    added.append(m.alias(m_name))
+    aggs = measure_aggs(m_name)
     for i, (alias, _pred) in enumerate((conditions or {}).items()):
-        added.append(
-            F.when(_pred, 1).otherwise(0).alias(f"_gp_c{i}")
-        )
-        aggs.append(F.sum(f"_gp_c{i}").alias(alias))
+        c_name = fresh(f"_gp_c{i}")
+        added.append(F.when(_pred, 1).otherwise(0).alias(c_name))
+        aggs.append(F.sum(c_name).alias(alias))
     if time_col:
         aggs.append(F.min(time_col).alias("first_activity"))
         aggs.append(F.max(time_col).alias("last_activity"))
-    # k is never an existing column (either _gp_key{i} or an alias absent
-    # from df.columns), so select("*", ...) appends without collisions —
-    # one plan op instead of a withColumn per key
+    # every added name is fresh, so select("*", ...) appends without
+    # collisions — one plan op instead of a withColumn per column
     tmp = df.select("*", *added) if added else df
     # Explicit width: a bare repartition(*cols) lets AQE coalesce the
     # shuffle to ~1 partition at local data sizes (64 MB advisory), which

@@ -374,6 +374,11 @@ FROM {table} t LEFT JOIN per_doc USING ({id_col})
 """
 
 
+# n-gram windows per decontaminate kernel chunk (the portable_dedup
+# bounded-memory pattern); module level so a test can force many chunks.
+_WINDOW_CHUNK = 1 << 20
+
+
 def decontaminate(
     train: DataFrame,
     eval_set: DataFrame,
@@ -439,16 +444,15 @@ def decontaminate(
     # C-side on the explicit class [\t\n\x0b\f\r ]+, PROVEN equal to
     # _ws_re's re.ASCII \s+ (both are exactly ASCII whitespace; the
     # equivalence — including \v, NBSP, U+2000.. non-splits — is pinned
-    # by test_decontaminate_kernel_matches_naive). Gram strings build as
-    # n shifted slices of the flat token array joined in C
+    # by test_decontaminate_vectorized_kernel_matches_naive). Gram strings
+    # build as n shifted slices of the flat token array joined in C
     # (binary_join_element_wise), windows that straddle a doc boundary
     # are masked via the token->doc index, and membership is ONE C-level
     # hash probe (pc.is_in) against the broadcast eval grams instead of
     # a Python set lookup per gram. Distinct-hit counting only ever
     # touches the (rare) surviving hits. Window slices are processed in
-    # bounded chunks so peak memory is independent of batch gram count
-    # (the portable_dedup ADVICE pattern).
-    _WINDOW_CHUNK = 1 << 20
+    # _WINDOW_CHUNK-sized chunks so peak memory is independent of batch
+    # gram count.
 
     def kernel(batches: Iterator) -> Iterator:
         import numpy as np

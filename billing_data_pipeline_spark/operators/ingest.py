@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -107,6 +107,32 @@ def dedup_append(
     return clean.join(existing_keys, on=keys, how="left_anti")
 
 
+def read_existing_table(spark: SparkSession, table_path: str) -> DataFrame | None:
+    """The parquet table at ``table_path``, or None when the next append
+    is its first write: the path does not exist, or it exists without
+    readable parquet (a crashed first write's debris, an ops-precreated
+    mount point — UNABLE_TO_INFER_SCHEMA).
+
+    Existence is a Hadoop FileSystem probe, not a failing read: once any
+    ``Observation`` has run in the session, Spark's ObservationManager
+    listener re-raises every failed query and logs a PATH_NOT_FOUND stack
+    trace at ERROR on each first write. Anything else — a transient read
+    failure (S3 503, EACCES, EIO), from the probe or the read — PROPAGATES:
+    taking it for "first batch" would skip the anti-join and re-append a
+    replayed batch as silent duplicates (review r5-r7)."""
+    from pyspark.errors import AnalysisException
+
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(table_path)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+        return None
+    try:
+        return spark.read.parquet(table_path)
+    except AnalysisException as exc:
+        if "UNABLE_TO_INFER_SCHEMA" in f"{exc.getErrorClass()} {exc}":
+            return None
+        raise
+
+
 def append_new_rows(
     batch: DataFrame,
     table_path: str,
@@ -114,23 +140,7 @@ def append_new_rows(
     existing_filter: Column | None = None,
 ) -> int:
     """Idempotent append of a batch into a parquet table; returns rows added."""
-    from pyspark.errors import AnalysisException
-
-    spark = batch.sparkSession
-    try:
-        existing = spark.read.parquet(table_path)
-    except AnalysisException as exc:
-        # ONLY a genuinely-absent table means "first batch". A transient
-        # read failure (S3 503, EACCES, EIO) must PROPAGATE: swallowing it
-        # skipped the anti-join and blindly re-appended a replayed batch —
-        # silent duplicates, the exact bug class the r5 NULL-key-path fix
-        # removed from the streaming caller, which still routed all
-        # non-NULL-key rows through this bare except (review r6).
-        msg = str(exc)
-        if "PATH_NOT_FOUND" in msg or "UNABLE_TO_INFER_SCHEMA" in msg:
-            existing = None
-        else:
-            raise
+    existing = read_existing_table(batch.sparkSession, table_path)
     if existing is None:
         new_rows = dedup_within_batch(batch, keys)
     else:
@@ -182,22 +192,7 @@ def append_new_rows_per_file(
     file at a time: one anti-join + one write for the whole batch, then a
     cheap groupBy on the surviving rows for the per-file split.
     """
-    from pyspark.errors import AnalysisException
-
-    spark = batch.sparkSession
-    try:
-        existing = spark.read.parquet(table_path)
-    except AnalysisException as exc:
-        # Same contract as append_new_rows (review r7 — this per-file
-        # twin, the one the PIPELINE calls, kept the bare except the r5/r6
-        # fixes removed from its sibling): only a genuinely-absent table
-        # is "first batch"; a transient read failure must PROPAGATE or a
-        # replayed batch re-appends every row as silent duplicates.
-        msg = str(exc)
-        if "PATH_NOT_FOUND" in msg or "UNABLE_TO_INFER_SCHEMA" in msg:
-            existing = None
-        else:
-            raise
+    existing = read_existing_table(batch.sparkSession, table_path)
     if existing is None:
         new_rows = dedup_within_batch(batch, keys)
     else:

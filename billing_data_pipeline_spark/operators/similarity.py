@@ -1732,13 +1732,17 @@ def pq_topk(
     # any miss falls through to the unchanged independent dispatches
     # (estimate unavailable => distributed, same polarity as every other
     # dispatch site).
+    # Each estimate is one Catalyst stats pass: taken once here and
+    # reused by the query-side fallback below.
     cproj = corpus.select(id_col, vec_col)
     qproj = queries.select(id_col, vec_col)
+    c_small = _proj_est(cproj) < _SEED_SMALL_BYTES
+    q_small = _proj_est(qproj) < _SEED_SMALL_BYTES
     seed_rows = None
     q_rows: list | None = None
     if (
-        _proj_est(cproj) < _SEED_SMALL_BYTES
-        and _proj_est(qproj) < _SEED_SMALL_BYTES
+        c_small
+        and q_small
         and [f.dataType for f in cproj.schema.fields]
         == [f.dataType for f in qproj.schema.fields]
     ):
@@ -1865,7 +1869,7 @@ def pq_topk(
     # when the fold was not taken, re-check the query side alone (the
     # independent pre-r12 dispatch: corpus big / queries small still
     # builds the tables driver-side).
-    if q_rows is None and _proj_est(qproj) < _SEED_SMALL_BYTES:
+    if q_rows is None and q_small:
         q_rows = [r for r in qproj.collect() if r[1] is not None]
     if q_rows is not None:
         if q_rows:

@@ -21,6 +21,31 @@ import os
 
 from pyspark.sql import SparkSession
 
+# JIT policy of the local-mode driver JVM: C1 only. Every CLI command
+# (run / stream / curate) starts a fresh JVM, does one pass and exits, and
+# in that pass HotSpot's C2 compiler spent about half of the JVM's CPU
+# (25 of 49 CPU-s on a 4-core perfbench billing_lake run, per thread from
+# /proc), compiling mostly Spark's own engine code, which the process
+# never runs long enough to earn back. Set as the launcher's *default*
+# java options, not extraJavaOptions: --driver-java-options replaces
+# extraJavaOptions, and this flag must survive a caller that sets, say,
+# java.io.tmpdir.
+# Long-lived sessions that re-run hot loops (bench.py's warmed protocol)
+# pass "-XX:TieredStopAtLevel=4" through extra_conf to get C2 back.
+LOCAL_DRIVER_JIT = "-XX:TieredStopAtLevel=1"
+
+
+def driver_jit_policy(spark: SparkSession) -> str:
+    """The TieredStopAtLevel flag the driver JVM actually runs with (the
+    last one on its command line wins), or "default" when none was given —
+    read from the JVM itself, not from the conf that asked for it."""
+    args = (
+        spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+        .getInputArguments()
+    )
+    flags = [a for a in args if a.startswith("-XX:TieredStopAtLevel=")]
+    return flags[-1] if flags else "default"
+
 
 def default_parallelism() -> int:
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -189,7 +214,7 @@ def get_spark(
         # local mode: the driver is the only JVM — give it the memory.
         builder = builder.config(
             "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g")
-        )
+        ).config("spark.driver.defaultJavaOptions", LOCAL_DRIVER_JIT)
     merged_conf = {**s3a_conf(), **(extra_conf or {})}
     for k, v in merged_conf.items():
         builder = builder.config(k, v)

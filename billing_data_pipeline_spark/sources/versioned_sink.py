@@ -80,8 +80,8 @@ class SnapshotTable:
         self.path = path
         # NO makedirs here (review r7): constructing a table handle is
         # not a write — a pure read of a never-built table must surface
-        # PATH_NOT_FOUND (the marker callers like append_new_rows match
-        # on), not an empty dir whose scan dies with
+        # PATH_NOT_FOUND (an absent table, which first-write callers like
+        # append_new_rows probe for), not an empty dir whose scan dies with
         # UNABLE_TO_INFER_SCHEMA. Mutators call _ensure_dir().
 
     def _ensure_dir(self) -> None:

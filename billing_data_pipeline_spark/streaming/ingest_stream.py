@@ -24,9 +24,8 @@ from operator import or_
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.errors import AnalysisException
 
-from ..operators.ingest import append_new_rows
+from ..operators.ingest import append_new_rows, read_existing_table
 from ..sources.csv_source import RAW_BILLING_KEYS, RAW_BILLING_SCHEMA
 
 
@@ -76,38 +75,26 @@ def replay_safe_append(batch: DataFrame, table_path: str, keys: list[str]) -> No
         F.to_json(F.struct(*[_stable(c) for c in batch.columns]))
     )
     hashed = null_part.withColumn("_row_hash", row_hash).dropDuplicates(["_row_hash"])
-    try:
+    # Same first-write contract as the batch twin append_new_rows: only
+    # an absent table (or one with no readable parquet, which would
+    # otherwise crash-loop the stream on every restart) skips the
+    # anti-join; a transient read failure propagates (review r5-r7).
+    existing = read_existing_table(batch.sparkSession, table_path)
+    if existing is None:
+        new_nulls = hashed
+    else:
         # prune the existing side to its NULL-key subset BEFORE hashing
         # (review r6): only NULL-key rows can ever hash-match a NULL-key
         # batch row (to_json omits null fields, so the key field SETS
         # differ for any non-NULL-key row) — without the filter every
         # micro-batch paid a full-table, all-columns scan + per-row
         # JSON+md5 where O(null-key subset) suffices
-        existing = (
-            batch.sparkSession.read.parquet(table_path)
-            .filter(reduce(or_, (F.col(k).isNull() for k in keys)))
-            .withColumn("_row_hash", row_hash)
-        )
+        existing = existing.filter(
+            reduce(or_, (F.col(k).isNull() for k in keys))
+        ).withColumn("_row_hash", row_hash)
         new_nulls = hashed.join(
             existing.select("_row_hash"), on="_row_hash", how="left_anti"
         )
-    except AnalysisException as exc:
-        # ONLY "table does not exist yet" may skip the anti-join: a bare
-        # except here treated any transient read failure as first-write
-        # and appended the replayed NULL-key batch a second time,
-        # silently breaking exactly-once (review r5). Like the batch twin
-        # append_new_rows (review r6 + r7): UNABLE_TO_INFER_SCHEMA is
-        # also first-write — a table dir that exists with no readable
-        # parquet (a crashed first write's _temporary debris, or an
-        # ops-precreated empty dir) would otherwise crash-loop the
-        # stream on every restart.
-        marker = f"{exc.getErrorClass()} {exc}"
-        if (
-            "PATH_NOT_FOUND" not in marker
-            and "UNABLE_TO_INFER_SCHEMA" not in marker
-        ):
-            raise
-        new_nulls = hashed
     # Persist across the emptiness probe + write: without it the take(1)
     # guard executed the whole anti-join plan (including the existing-table
     # scan) twice per micro-batch (review r3; same pattern as

@@ -82,3 +82,77 @@ def test_cli_stream_drains_lake(spark, tmp_path, capsys):
     out, _ = capsys.readouterr()
     assert json.loads(out)["stream"] == "drained"
     assert spark.read.parquet(f"{wh}/raw_billing").count() == n
+
+
+def _jit_policy_of_fresh_jvm(session_code: str, env: dict[str, str]) -> str:
+    """driver_jit_policy of a local-mode JVM started by ``session_code``
+    (which must bind ``spark``) in a fresh interpreter — the test session's
+    own JVM is already running, so get_spark would hand it back."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys\n"
+        f"sys.path.insert(0, {root!r})\n"
+        "from billing_data_pipeline_spark.session import driver_jit_policy\n"
+        f"{session_code}\n"
+        "print('JIT', driver_jit_policy(spark))\n"
+        "spark.stop()\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=root,
+        env={**os.environ, "SPARK_GRAFT_CPUS": "2", "SPARK_MASTER": "", **env},
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("JIT ")]
+    assert out.returncode == 0 and lines, out.stderr[-2000:]
+    return lines[-1].split(" ", 1)[1]
+
+
+def test_local_session_jvm_runs_c1_only(spark):
+    """Every CLI command is one pass in a fresh local-mode JVM, so
+    get_spark starts it with C2 off (session.LOCAL_DRIVER_JIT) — checked
+    on the JVM's own command line, not on the conf that asked for it."""
+    from billing_data_pipeline_spark.session import LOCAL_DRIVER_JIT
+
+    assert spark.sparkContext.master.startswith("local")
+    args = list(
+        spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+        .getInputArguments()
+    )
+    assert LOCAL_DRIVER_JIT == "-XX:TieredStopAtLevel=1"
+    assert [a for a in args if a.startswith("-XX:TieredStopAtLevel=")] == [
+        LOCAL_DRIVER_JIT
+    ]
+
+
+def test_c1_only_survives_driver_java_options():
+    """A launch that passes --driver-java-options (which REPLACES
+    spark.driver.extraJavaOptions) must still get the C1-only policy: it
+    rides spark.driver.defaultJavaOptions for exactly this reason."""
+    policy = _jit_policy_of_fresh_jvm(
+        "from billing_data_pipeline_spark.session import get_spark\n"
+        "spark = get_spark(shuffle_partitions=2)",
+        {
+            "PYSPARK_SUBMIT_ARGS": '--driver-java-options "-XX:-UsePerfData" '
+            "pyspark-shell"
+        },
+    )
+    assert policy == "-XX:TieredStopAtLevel=1"
+
+
+def test_bench_session_keeps_tiered_jit():
+    """bench.py warms each query until its loops reach C2, so its session
+    overrides the C1-only default; the policy it records in bench_detail
+    (driver_jit_policy of bench_session) must be the tiered one."""
+    from .conftest import SF_SMOKE
+
+    policy = _jit_policy_of_fresh_jvm(
+        f"import bench\nspark = bench.bench_session({SF_SMOKE!r})", {}
+    )
+    assert policy == "-XX:TieredStopAtLevel=4"

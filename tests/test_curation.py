@@ -183,6 +183,44 @@ def test_decontaminate_vectorized_kernel_matches_naive(spark):
     assert got[3] == (2, True)  # distinct, not per-occurrence
 
 
+def test_decontaminate_chunked_windows_identical(spark, monkeypatch):
+    """The kernel walks each batch's n-gram windows in _WINDOW_CHUNK-sized
+    chunks; a tiny chunk must give the one-shot result. Every window of
+    doc 1 is a hit (its whole text is in the eval set), so whatever its
+    offset in the batch, some hit window starts in one chunk and reads
+    tokens of the next; doc 2 repeats its grams across chunks (counted
+    once); docs 3|4 probe the doc-boundary mask inside a chunk."""
+    n = 3
+    long_doc = " ".join(f"t{i}" for i in range(14))  # 12 windows
+    train_rows = [
+        (1, long_doc),
+        (2, "r s t r s t r s t r s t"),
+        (3, "a b"),
+        (4, "c d e"),
+    ]
+    eval_rows = [(100, long_doc), (101, "r s t"), (102, "t r s"), (103, "a b c")]
+    # one partition: the docs share a batch, so its flat token array
+    # spans several chunks and doc boundaries
+    train = spark.createDataFrame(train_rows, "doc_id long, text string").coalesce(1)
+    ev = spark.createDataFrame(eval_rows, "doc_id long, text string")
+
+    def run():
+        return {
+            r["doc_id"]: (r["n_hit_ngrams"], r["contaminated"])
+            for r in C.decontaminate(train, ev, "doc_id", "text", n=n).collect()
+        }
+
+    one_shot = run()
+    monkeypatch.setattr(C, "_WINDOW_CHUNK", 4)
+    chunked = run()
+    assert chunked == one_shot == {
+        1: (12, True),
+        2: (2, True),
+        3: (0, False),
+        4: (0, False),
+    }
+
+
 def test_mix_to_budget_coarse_form_identical(spark):
     # Two-level prefix sum (coarse buckets) must produce the identical
     # keep-set/summary as the row-level cumsum, across sources whose

@@ -341,3 +341,60 @@ def test_fs_mutex_heartbeat_stops_when_token_changes(tmp_path):
     # and release must not have unlinked the foreign lock either
     assert os.path.exists(lock)
     assert open(lock).read() == "9999:someone-else"
+
+
+def test_first_write_makes_no_failing_read(spark, tmp_path, monkeypatch):
+    """A first write probes the table path instead of reading it and
+    catching PATH_NOT_FOUND: once an Observation has run in the session,
+    Spark's ObservationManager listener logs every failed read at ERROR
+    with a stack trace. Covers the batch append, its per-file twin (the
+    pipeline's) and the streaming NULL-key path."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from billing_data_pipeline_spark.operators.ingest import (
+        append_new_rows_per_file,
+    )
+    from billing_data_pipeline_spark.streaming.ingest_stream import (
+        replay_safe_append,
+    )
+
+    failed: list[str] = []
+    real_parquet = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        try:
+            return real_parquet(self, *paths, **kw)
+        except Exception:
+            failed.append(str(paths))
+            raise
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    batch = _df(spark, [_row(i) for i in range(3)])
+    assert append_new_rows(batch, str(tmp_path / "a"), KEYS) == 3
+    per_file = batch.withColumn("_file", F.lit("f1"))
+    n, by_file = append_new_rows_per_file(per_file, str(tmp_path / "b"), KEYS, "_file")
+    assert (n, by_file) == (3, {"f1": 3})
+    null_keys = _df(spark, [(None, "r", "u", "inv", 1.0)])
+    replay_safe_append(null_keys, str(tmp_path / "c"), KEYS)
+    assert spark.read.parquet(str(tmp_path / "c")).count() == 1
+    assert failed == []
+
+
+def test_existing_table_read_failure_propagates(spark, tmp_path, monkeypatch):
+    """Only an absent table (or one without readable parquet) is a first
+    write: any other read failure of an existing table must raise, or a
+    replayed batch would skip the anti-join and re-append as duplicates."""
+    import pytest
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.readwriter import DataFrameReader
+
+    table = str(tmp_path / "t")
+    batch = _df(spark, [_row(i) for i in range(3)])
+    assert append_new_rows(batch, table, KEYS) == 3
+
+    def denied(self, *paths, **kw):
+        raise AnalysisException(message="[PERMISSION_DENIED] injected")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", denied)
+    with pytest.raises(AnalysisException, match="PERMISSION_DENIED"):
+        append_new_rows(batch, table, KEYS)

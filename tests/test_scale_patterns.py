@@ -328,6 +328,37 @@ def test_grouped_profile_one_shuffle_and_alias_shadow(spark):
     assert out["A"]["transaction_count"] == 2
 
 
+def test_grouped_profile_temp_columns_never_shadow_inputs(spark):
+    """The k >= 2 tier's precomputed measure (_gp_m), condition (_gp_c{i})
+    and group-key (_gp_key{i}) columns are appended next to the input's
+    own: an input that already carries those names (any case) must
+    neither fail as an ambiguous reference nor feed the wrong column into
+    an aggregate."""
+    from billing_data_pipeline_spark.operators.aggregates import (
+        grouped_profile,
+    )
+
+    src = spark.createDataFrame(
+        [("a", 1.0, 100.0, 7, 9), ("A", 2.0, 200.0, 8, 9), ("b", 4.0, 400.0, 7, 9)],
+        "g string, v double, _gp_m double, _GP_C0 int, _gp_key0 int",
+    )
+    out = {
+        r["g"]: r
+        for r in grouped_profile(
+            src,
+            [F.upper("g").alias("g")],
+            "v",
+            distinct_cols={"raw_gs": "g", "c0s": "_GP_C0"},
+            conditions={"big": F.col("_gp_m") > 150},
+        ).collect()
+    }
+    assert out["A"]["total_usage"] == 3.0  # v, not the input's _gp_m
+    assert out["A"]["big"] == 1 and out["B"]["big"] == 1
+    assert (out["A"]["raw_gs"], out["A"]["c0s"]) == (2, 2)
+    assert (out["B"]["raw_gs"], out["B"]["c0s"]) == (1, 1)
+    assert out["A"]["transaction_count"] == 2
+
+
 def test_widen_scan_tier_equivalent_and_round_robin(spark):
     """r11 widen_scan opt-in (single-distinct tier, low group
     cardinality): (1) results are bit-identical to the plain tier — the
