@@ -25,6 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from billing_data_pipeline_spark.registry import load_catalog
 from billing_data_pipeline_spark.session import (
+    TIERED_DRIVER_JIT,
     dir_input_bytes,
     driver_jit_policy,
     get_spark,
@@ -47,7 +48,7 @@ def bench_session(sf_dir: str):
         app_name="bdp-spark-bench",
         extra_conf={
             **input_sized_conf(dir_input_bytes(sf_dir)),
-            "spark.driver.defaultJavaOptions": "-XX:TieredStopAtLevel=4",
+            "spark.driver.defaultJavaOptions": TIERED_DRIVER_JIT,
         },
     )
 

@@ -61,9 +61,13 @@ def main(argv: list[str] | None = None) -> int:
 
     args = ap.parse_args(argv)
 
-    from .session import get_spark
+    from .session import get_spark, one_pass_jit_conf
 
-    spark = get_spark(app_name=f"bdp-{args.cmd}")
+    # Each command is one pass in a fresh JVM: C1-only unless what it reads
+    # (the warehouse too: aggregates are rebuilt over all of raw_billing)
+    # is large enough for C2 to pay.
+    reads = [getattr(args, a) for a in ("source", "warehouse", "docs") if hasattr(args, a)]
+    spark = get_spark(app_name=f"bdp-{args.cmd}", extra_conf=one_pass_jit_conf(reads))
 
     if args.cmd == "run":
         from .pipeline import BillingPipeline

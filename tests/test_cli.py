@@ -118,17 +118,10 @@ def test_local_session_jvm_runs_c1_only(spark):
     """Every CLI command is one pass in a fresh local-mode JVM, so
     get_spark starts it with C2 off (session.LOCAL_DRIVER_JIT) — checked
     on the JVM's own command line, not on the conf that asked for it."""
-    from billing_data_pipeline_spark.session import LOCAL_DRIVER_JIT
+    from billing_data_pipeline_spark.session import LOCAL_DRIVER_JIT, driver_jit_policy
 
     assert spark.sparkContext.master.startswith("local")
-    args = list(
-        spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
-        .getInputArguments()
-    )
-    assert LOCAL_DRIVER_JIT == "-XX:TieredStopAtLevel=1"
-    assert [a for a in args if a.startswith("-XX:TieredStopAtLevel=")] == [
-        LOCAL_DRIVER_JIT
-    ]
+    assert driver_jit_policy(spark) == LOCAL_DRIVER_JIT == "-XX:TieredStopAtLevel=1"
 
 
 def test_c1_only_survives_driver_java_options():
@@ -156,3 +149,54 @@ def test_bench_session_keeps_tiered_jit():
         f"import bench\nspark = bench.bench_session({SF_SMOKE!r})", {}
     )
     assert policy == "-XX:TieredStopAtLevel=4"
+
+
+def test_one_pass_jit_conf_keeps_c1_for_small_inputs_only(tmp_path, monkeypatch):
+    """A one-pass command keeps the C1-only default up to
+    ONE_PASS_C1_MAX_BYTES of input (files and directories summed) and asks
+    for the tiered JIT above it, or when an input cannot be sized locally."""
+    from billing_data_pipeline_spark import session
+
+    tiered = {"spark.driver.defaultJavaOptions": session.TIERED_DRIVER_JIT}
+    (tmp_path / "lake" / "day=01").mkdir(parents=True)
+    (tmp_path / "lake" / "day=01" / "billing.csv").write_bytes(b"x" * 600)
+    (tmp_path / "docs.parquet").write_bytes(b"x" * 500)
+    paths = [str(tmp_path / "lake"), str(tmp_path / "docs.parquet"), str(tmp_path / "absent")]
+    monkeypatch.setattr(session, "ONE_PASS_C1_MAX_BYTES", 1100)
+    assert session.one_pass_jit_conf(paths) == {}
+    assert session.one_pass_jit_conf([f"file://{tmp_path}/lake"]) == {}
+    monkeypatch.setattr(session, "ONE_PASS_C1_MAX_BYTES", 1099)
+    assert session.one_pass_jit_conf(paths) == tiered
+    assert session.one_pass_jit_conf(["s3a://bucket/lake"]) == tiered
+
+
+def test_cli_sizes_jit_from_what_it_reads(tmp_path, monkeypatch):
+    """Each CLI command hands get_spark the JIT conf for its own inputs:
+    the source and warehouse of run/stream, the warehouse of insights, the
+    docs of curate — not the checkpoint or the output."""
+    from billing_data_pipeline_spark import session
+
+    seen = []
+
+    def fake_get_spark(app_name, extra_conf):
+        seen.append(extra_conf)
+        raise SystemExit(0)
+
+    monkeypatch.setattr(session, "get_spark", fake_get_spark)
+    monkeypatch.setattr(session, "one_pass_jit_conf", lambda paths: {"reads": paths})
+    for argv in (
+        ["run", "--source", "L", "--warehouse", "W"],
+        ["insights", "--warehouse", "W"],
+        ["stream", "--source", "L", "--warehouse", "W", "--checkpoint", "C"],
+        ["curate", "--docs", "D", "--out", "O"],
+    ):
+        try:
+            main(argv)
+        except SystemExit:
+            pass
+    assert seen == [
+        {"reads": ["L", "W"]},
+        {"reads": ["W"]},
+        {"reads": ["L", "W"]},
+        {"reads": ["D"]},
+    ]
